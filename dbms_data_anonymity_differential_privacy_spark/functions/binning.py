@@ -10,9 +10,11 @@ oracle. (pd.cut is right-closed with a 0.1% left-edge extension; values
 exactly on an interior edge land one bin lower there — documented
 divergence, irrelevant for continuous data.)
 
-Scale note: the min/max pre-pass is a 2-value aggregate broadcast back via
-``crossJoin(broadcast(...))`` — no global window (a
-``Window.partitionBy()`` would collapse the whole table to one partition).
+Scale note: the min/max pre-pass is one 2-value aggregate, resolved eagerly
+with ``.first()`` and inlined as literals of the column's type — no global
+window (a ``Window.partitionBy()`` would collapse the whole table to one
+partition), and no broadcast stage that every plan reusing the binned
+relation (counts, fact probe, write, audits) would otherwise re-run.
 """
 
 from __future__ import annotations
@@ -27,23 +29,28 @@ def bin_equal_width(df: DataFrame, col: str, n_bins: int, out_col: str | None = 
     """P17 — equal-width binning over the observed [min, max] of ``col``.
 
     Adds ``out_col`` (default ``{col}_bin``) as an INT in [0, n_bins-1];
-    NULL input → NULL bin. Degenerate min==max → bin 0.
+    NULL input → NULL bin. Degenerate min==max → bin 0 (every row). An
+    all-NULL column bins to NULL.
+
+    Eager: the bounds are one ``.first()`` job at call time, so a
+    streaming input (no global bounds) is rejected.
     """
-    out_col = out_col or f"{col}_bin"
-    mn, mx = f"__{col}_mn", f"__{col}_mx"
-    minmax = df.agg(F.min(col).alias(mn), F.max(col).alias(mx))
-    binned = df.crossJoin(F.broadcast(minmax)).withColumn(
-        out_col,
-        F.when(F.col(mn) == F.col(mx), F.lit(0))
-        .otherwise(
-            F.least(
-                F.floor((F.col(col) - F.col(mn)) * n_bins / (F.col(mx) - F.col(mn))),
-                F.lit(n_bins - 1),
-            )
+    if df.isStreaming:
+        raise ValueError(
+            f"bin_equal_width({col!r}) needs a batch DataFrame: equal-width "
+            "bins come from the column's global min/max, which a stream "
+            "does not have; bin with fixed edges (bin_explicit_edges) instead"
         )
+    out_col = out_col or f"{col}_bin"
+    dtype = df.schema[col].dataType
+    lo, hi = df.agg(F.min(col), F.max(col)).first()
+    mn, mx = F.lit(lo).cast(dtype), F.lit(hi).cast(dtype)
+    return df.withColumn(
+        out_col,
+        F.when(mn == mx, F.lit(0))
+        .otherwise(F.least(F.floor((F.col(col) - mn) * n_bins / (mx - mn)), F.lit(n_bins - 1)))
         .cast("int"),
     )
-    return binned.drop(mn, mx)
 
 
 def equal_width_bin_sql(table: str, col: str, n_bins: int, out_col: str | None = None) -> str:

@@ -9,9 +9,11 @@ positions, positions, global_probs, group_probs)`` with positions
 
     EMD = sum over positions p < m-1 of |CDF_class(p) - CDF_global(p)|
 
-which we compute with a window cumulative sum — pure built-in SQL, fully
-whole-stage-codegen'd and DuckDB-oracle-checkable. No per-group Python
-loop (the reference loops classes in the driver; we shuffle once).
+which we compute as a left-fold cumulative sum over the sorted support:
+one built-in expression chain per class (DuckDB-oracle-checkable), or the
+same fold on the driver over the collected (class, sensitive, count)
+relation when it is small (see Scale). Fact rows are never looped in
+Python; they are aggregated once.
 
 Mode quirk (SURVEY §3.4): the reference's *main pipeline* invokes its
 check once per class, so the "global" distribution is the class itself and
@@ -20,20 +22,31 @@ to the intended Li/Li/Venkatasubramanian (ICDE 2007) semantics
 (``mode='strict'``) and keep ``mode='reference'`` (k-filter only) to
 replicate the published numbers.
 
-Scale: the support (distinct sensitive values) is tiny → broadcast. The
-class-distribution relation has |classes| x |support| rows — far smaller
-than the fact table. The only big shuffle is the initial per-class count.
+Scale: the fact table is aggregated once, into the (class, sensitive,
+count) relation of |classes| x |support| rows. When that relation fits
+under ``spark.graft.broadcast.keyRowLimit`` rows (the usual case: the
+support is small by definition and classes are at most rows/k), the
+filter collects it in ONE action and decides k and EMD on the driver with
+the engine's arithmetic; the passing keys go back to the fact scan as a
+broadcast local relation. Above the limit every step stays distributed.
 """
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import k_anonymize_suppress
-from dbms_data_anonymity_differential_privacy_spark.operators.util import gate_broadcast_keys
+from dbms_data_anonymity_differential_privacy_spark.operators.util import (
+    gate_broadcast_keys,
+    key_row_limit,
+    track_cached,
+)
 
 ROUND_DP = 9
 
@@ -92,7 +105,7 @@ def class_emd(df: DataFrame, qi: Sequence[str], sensitive: str) -> DataFrame:
     from it. At 100 TB the big table contributes one aggregation; all EMD
     math happens on kilobytes.
     """
-    counts = (
+    counts = track_cached(
         df.groupBy(*qi, sensitive).agg(F.count(F.lit(1)).alias("__cnt")).persist()
     )
     return _emd_from_counts(counts, qi, sensitive)
@@ -100,7 +113,8 @@ def class_emd(df: DataFrame, qi: Sequence[str], sensitive: str) -> DataFrame:
 
 def _emd_from_counts(counts: DataFrame, qi: Sequence[str], sensitive: str) -> DataFrame:
     """EMD math over a pre-aggregated ``(*qi, sensitive, __cnt)`` relation.
-    Callers persist ``counts`` (it feeds four small consumers).
+    Callers persist ``counts`` (it feeds the global distribution and the
+    per-class fold). :func:`_driver_verdict` is its driver-side twin.
 
     Shape (r11 rewrite): the sensitive support is SMALL BY DEFINITION in
     t-closeness (it is the attribute whose distribution is being
@@ -186,32 +200,170 @@ def t_closeness_filter(
     the EMD test vacuous — only the k-filter acts (SURVEY §3.4).
 
     Physical shape: the fact table is NEVER shuffled as whole rows. One
-    aggregation produces the (class, sensitive, count) relation; class
-    sizes, the k-filter, and the EMD verdict are all computed on that tiny
-    relation; surviving class keys join back onto the fact scan as a
-    semi-join whose broadcast hint is SIZE-GATED (``gate_broadcast_keys``):
-    the verdict relation is worst-case rows/k keys, so it is counted once
-    and broadcast only under ``spark.graft.broadcast.keyRowLimit`` rows —
-    above that the hint is withheld and AQE plans a shuffled semi-join
-    with runtime skew splitting; the algebra is unchanged.
+    aggregation produces the (class, sensitive, count) relation and
+    :func:`class_verdict_keys` turns it into the passing class keys, which
+    join back onto the fact scan as a semi-join. Under
+    ``spark.graft.broadcast.keyRowLimit`` counts rows that is one action
+    and a broadcast local key relation; above it the verdict stays
+    distributed and AQE plans a shuffled semi-join with runtime skew
+    splitting. The algebra is the same either way.
     """
     if mode not in ("strict", "reference"):
         raise ValueError(f"unknown mode: {mode}")
-    counts = (
-        df.groupBy(*qi, sensitive).agg(F.count(F.lit(1)).alias("__cnt")).persist()
-    )
+    counts = df.groupBy(*qi, sensitive).agg(F.count(F.lit(1)).alias("__cnt"))
+    ok = class_verdict_keys(counts, qi, sensitive, k, t, mode)
+    return df.join(ok, on=list(qi), how="left_semi")
+
+
+def class_verdict_keys(
+    counts: DataFrame,
+    qi: Sequence[str],
+    sensitive: str,
+    k: int,
+    t: float,
+    mode: str = "strict",
+) -> DataFrame:
+    """The class keys ``(*qi)`` that pass the k-filter and, in strict
+    mode, the EMD test against the post-k global distribution, from a
+    ``(*qi, sensitive, __cnt)`` counts relation. The result is meant for
+    a semi-join back onto the fact rows.
+
+    Counts under ``spark.graft.broadcast.keyRowLimit`` rows: ONE action
+    (``counts.limit(limit + 1).collect()``), the verdict computed on the
+    driver by :func:`_driver_verdict`, returned as a broadcast-hinted
+    local relation built through Arrow (a ``LocalRelation``, so reusing
+    it never starts a job or a Python worker). Otherwise, or for a
+    streaming or non-exact key type (:func:`_driver_exact`), the
+    distributed chain: size-gated k keys, persisted post-k counts,
+    :func:`_emd_from_counts`, size-gated passing keys.
+
+    The probe does not cache ``counts``: caching would add a cache-build
+    job to every call under the limit (+0.3-0.7 s per release of 150k
+    rows, 4 cores). Above the limit the chain persists ``counts`` and so
+    aggregates the input once more; a caller that reuses ``counts``
+    (``t_closeness_pipeline``) persists it first, and pays no second pass.
+    """
+    qi = list(qi)
+    if not counts.isStreaming and all(
+        _driver_exact(counts.schema[c].dataType) for c in (*qi, sensitive)
+    ):
+        limit = key_row_limit(counts.sparkSession)
+        rows = counts.limit(limit + 1).collect()
+        if len(rows) <= limit:
+            keys = _driver_verdict(rows, len(qi), k, t, mode)
+            return F.broadcast(_key_relation(counts, qi, keys))
+    if not counts.is_cached:
+        counts = track_cached(counts.persist())
     sizes = counts.groupBy(*qi).agg(F.sum("__cnt").alias("__class_size"))
-    big = sizes.filter(F.col("__class_size") >= F.lit(k)).select(*qi)
+    big = gate_broadcast_keys(sizes.filter(F.col("__class_size") >= F.lit(k)).select(*qi))
     if mode == "reference":
-        return df.join(gate_broadcast_keys(big), on=list(qi), how="left_semi")
-    # strict: EMD measured over the post-k-anonymity population. The gated
-    # `big` keys feed BOTH the counts semi-join and nothing else; `ok` is
-    # gated separately before the fact probe.
-    big = gate_broadcast_keys(big)
-    kcounts = counts.join(big, on=list(qi), how="left_semi").persist()
+        return big
+    # strict: EMD measured over the post-k-anonymity population
+    kcounts = track_cached(counts.join(big, on=qi, how="left_semi").persist())
     emd = _emd_from_counts(kcounts, qi, sensitive)
-    ok = emd.filter(F.col("emd") <= F.lit(t)).select(*qi)
-    return df.join(gate_broadcast_keys(ok), on=list(qi), how="left_semi")
+    return gate_broadcast_keys(emd.filter(F.col("emd") <= F.lit(t)).select(*qi))
+
+
+_EXACT_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.DateType, T.BinaryType,
+)
+
+
+def _driver_exact(dt: T.DataType) -> bool:
+    """Whether Python equality and ordering of collected values match
+    Spark's grouping and sort for ``dt``, and the values survive the
+    Arrow round trip unchanged. Strings qualify only under the binary
+    collation (UTF-8 byte order is code-point order); timestamps do not
+    (collect() localizes them to the Python process's time zone)."""
+    if isinstance(dt, T.StringType):
+        return getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
+    return isinstance(dt, _EXACT_TYPES)
+
+
+# One key for every float NaN: Spark groups and joins NaN = NaN and sorts
+# it above every other value; Python's NaN equals nothing.
+_NAN = object()
+
+
+def _norm(v):
+    return _NAN if isinstance(v, float) and v != v else v
+
+
+def _order(v):
+    return (1, 0) if v is _NAN else (0, v)
+
+
+def _spark_round(v: float, nd: int) -> float:
+    """Spark's ``round`` on a double: ``BigDecimal.valueOf(v)`` (the
+    shortest decimal string) rounded HALF_UP to ``nd`` places."""
+    if not math.isfinite(v):
+        return v
+    return float(Decimal(repr(v)).quantize(Decimal(1).scaleb(-nd), rounding=ROUND_HALF_UP))
+
+
+def _driver_verdict(rows, n_qi: int, k: int, t: float, mode: str) -> list[tuple]:
+    """Driver-side twin of the distributed verdict over collected
+    ``(*qi, sensitive, __cnt)`` rows: the passing class keys.
+
+    Same arithmetic as :func:`_emd_from_counts`, term by term: class size
+    over all rows, global ``g_j / total`` and per-class
+    ``cnt_j / class_tot`` as int/int divisions (correctly rounded, as
+    Spark's long-to-double division is below 2^53), the left-fold ``cum``
+    and ``emd`` summed in ascending support order, 0.0 for a class whose
+    every sensitive value is NULL and for a one-value support, then
+    Spark's HALF_UP 9-dp round before the ``<= t`` test. Classes with a
+    NULL QI value are dropped up front: they never match the semi-join,
+    so they neither pass nor count toward the global distribution.
+    """
+    classes: dict[tuple, list] = {}  # norm key -> [key, size, {sensitive: cnt}]
+    for r in rows:
+        key = tuple(r[:n_qi])
+        if any(v is None for v in key):
+            continue
+        c = classes.setdefault(tuple(map(_norm, key)), [key, 0, {}])
+        c[1] += r[n_qi + 1]
+        if r[n_qi] is not None:
+            c[2][_norm(r[n_qi])] = r[n_qi + 1]
+    big = [c for c in classes.values() if c[1] >= k]
+    if mode == "reference":
+        return [c[0] for c in big]
+    g: dict = {}
+    for _, _, m in big:
+        for s, cnt in m.items():
+            g[s] = g.get(s, 0) + cnt
+    if not g:
+        return []  # no support value: the distributed EMD relation is empty
+    support = sorted(g, key=_order)
+    total = sum(g.values())
+    pg = [g[s] / total for s in support]
+    keep = []
+    for key, _, m in big:
+        cum = emd = 0.0  # adding to an initial 0.0 is exact
+        if m and len(support) > 1:
+            tot = sum(m.values())
+            for j in range(len(support) - 1):
+                cum += m.get(support[j], 0) / tot - pg[j]
+                emd += abs(cum)
+        if _spark_round(emd, ROUND_DP) <= t:
+            keep.append(key)
+    return keep
+
+
+def _key_relation(counts: DataFrame, qi: list[str], keys: list[tuple]) -> DataFrame:
+    """``keys`` as a local relation with the QI columns' types, built
+    through Arrow so Spark plans a ``LocalRelation`` (a Python list would
+    give a ``LogicalRDD`` that starts Python workers on every execution)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    schema = T.StructType([counts.schema[c] for c in qi])
+    cols = list(zip(*keys)) if keys else [()] * len(qi)
+    table = pa.Table.from_arrays(
+        [pa.array(list(v), type=to_arrow_type(f.dataType)) for v, f in zip(cols, schema)],
+        names=qi,
+    )
+    return counts.sparkSession.createDataFrame(table, schema=schema)
 
 
 def l_diversity_filter(

@@ -41,15 +41,21 @@ BROADCAST_KEY_ROW_LIMIT_CONF = "spark.graft.broadcast.keyRowLimit"
 DEFAULT_KEY_ROW_LIMIT = 1_000_000
 
 
+def key_row_limit(spark) -> int:
+    """The session's ``spark.graft.broadcast.keyRowLimit``: the most
+    class-key rows the engine broadcasts (or resolves on the driver)."""
+    return int(spark.conf.get(BROADCAST_KEY_ROW_LIMIT_CONF, str(DEFAULT_KEY_ROW_LIMIT)))
+
+
 def gate_broadcast_keys(
     keys: DataFrame, row_limit: int | None = None, hint: str = "auto"
 ) -> DataFrame:
     """Size-gate a class-key relation before it is used as the built side
     of a semi/anti join: broadcast-hint it ONLY when it is actually small.
 
-    The k-anonymity / t-closeness family joins a derived key relation
-    (frequent classes, EMD-passing classes) back onto the fact scan. That
-    relation is worst-case rows/k keys — on a 100 TB fact table with a
+    The k-anonymity family joins a derived key relation (frequent
+    classes, diverse classes) back onto the fact scan. That relation is
+    worst-case rows/k keys — on a 100 TB fact table with a
     high-cardinality QI it can reach tens of GB, and a hard-coded
     ``F.broadcast`` hint would OOM the driver (the hint overrides Spark's
     own ``autoBroadcastJoinThreshold`` safety). Editing source to "drop
@@ -70,13 +76,18 @@ def gate_broadcast_keys(
     Streaming inputs pass through un-hinted (no count possible); the
     stream-side k-anon gates build their key relations per micro-batch.
 
+    t-closeness gates its keys only above the limit: under it,
+    ``t_closeness_filter`` collects the whole (class, sensitive, count)
+    relation in one action, decides k and EMD on the driver and
+    broadcasts a local key relation, so no gate count runs at all.
+
     Cache contract (ownership + release): the persisted key relation is
     NOT unpersisted here — the caller's join consumes it lazily, so this
     function cannot know when release is safe. Instead every persisted
     relation is tracked in a module-level registry;
     :func:`release_cached_relations` unpersists and clears them all, and
     is the contract for long-lived sessions that compose many
-    k-anonymize/t-closeness calls: run the consuming action, then call
+    k-anonymize calls: run the consuming action, then call
     ``release_cached_relations()`` (the engine's harnesses — bench, the oracle
     gate, the plans fixture — already ``clearCache()`` between queries,
     which subsumes it). In the hinted branch the residue is bounded by
@@ -116,11 +127,7 @@ def gate_broadcast_keys(
     if hint == "shuffle":
         return keys
     if row_limit is None:
-        row_limit = int(
-            keys.sparkSession.conf.get(
-                BROADCAST_KEY_ROW_LIMIT_CONF, str(DEFAULT_KEY_ROW_LIMIT)
-            )
-        )
+        row_limit = key_row_limit(keys.sparkSession)
     keys = track_cached(keys.persist())
     return F.broadcast(keys) if keys.count() <= row_limit else keys
 

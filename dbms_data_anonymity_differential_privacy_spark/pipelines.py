@@ -41,6 +41,7 @@ from dbms_data_anonymity_differential_privacy_spark.operators.metrics import (
 from dbms_data_anonymity_differential_privacy_spark.operators.tcloseness import (
     ROUND_DP as _ROUND_DP,
     _emd_from_counts,
+    class_verdict_keys,
 )
 from dbms_data_anonymity_differential_privacy_spark.operators.util import gate_broadcast_keys, track_cached
 
@@ -241,21 +242,9 @@ def t_closeness_pipeline(
             .persist()
         )
     )
-    sizes = counts.groupBy(*eff_qi).agg(F.sum("__cnt").alias("__class_size"))
-    big = sizes.filter(F.col("__class_size") >= F.lit(k)).select(*eff_qi)
-    # Verdict-key relations are worst-case rows/k keys — size-gated hint
-    # (gate_broadcast_keys) instead of a hard F.broadcast: counted once
-    # (the persisted relation then feeds both consumers below), broadcast
-    # only under spark.graft.broadcast.keyRowLimit, else AQE shuffled semi.
-    if mode == "reference":
-        ok = gate_broadcast_keys(big)  # SURVEY §3.4: as-written = k-filter only
-    else:
-        kcounts = counts.join(gate_broadcast_keys(big), on=eff_qi, how="left_semi")
-        ok = gate_broadcast_keys(
-            _emd_from_counts(kcounts, eff_qi, sensitive)
-            .filter(F.col("emd") <= F.lit(t))
-            .select(*eff_qi)
-        )
+    # the filter's own verdict (one action on the persisted counts under
+    # spark.graft.broadcast.keyRowLimit, distributed above it)
+    ok = class_verdict_keys(counts, eff_qi, sensitive, k, t, mode)
     post_counts = track_cached(counts.join(ok, on=eff_qi, how="left_semi").persist())
     anon = track_cached(work.join(ok, on=eff_qi, how="left_semi").persist())
 

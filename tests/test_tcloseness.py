@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -239,3 +241,172 @@ def test_m_invariance_validation(spark):
     df = spark.createDataFrame([("q", "s")], "q string, s string")
     with pytest.raises(ValueError):
         m_invariance_audit(df, df, ["q"], "s", m=0)
+
+
+# ---------------------------------------------------------------------------
+# driver-side verdict (under spark.graft.broadcast.keyRowLimit) vs the
+# distributed verdict (forced with a one-row limit)
+# ---------------------------------------------------------------------------
+
+LIMIT_CONF = "spark.graft.broadcast.keyRowLimit"
+
+
+@contextmanager
+def _distributed(spark):
+    prev = spark.conf.get(LIMIT_CONF, None)
+    spark.conf.set(LIMIT_CONF, "1")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(LIMIT_CONF)
+        else:
+            spark.conf.set(LIMIT_CONF, prev)
+
+
+def _plan(df) -> str:
+    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    return df._jdf.queryExecution().explainString(jmode)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _both_paths(spark, df, qi, sens, **kw):
+    """(driver-path rows, distributed-path rows), each sorted; asserts
+    each path really ran (an empty input has no distributed path: its
+    zero counts rows are always under the limit)."""
+    fast = t_closeness_filter(df, qi, sens, **kw)
+    assert "LocalTableScan" in _plan(fast)
+    with _distributed(spark):
+        slow = t_closeness_filter(df, qi, sens, **kw)
+        assert df.isEmpty() or "LocalTableScan" not in _plan(slow)
+        slow_rows = _rows(slow)
+    return _rows(fast), slow_rows
+
+
+@pytest.mark.parametrize("mode", ["strict", "reference"])
+def test_driver_verdict_matches_distributed_sf001(spark, sf001, mode):
+    b = bin_equal_width(load_table(spark, sf001, "orders"), "o_totalprice", 10, "price_bin")
+    for t in (0.0, 0.02, 0.05, 0.2):
+        fast, slow = _both_paths(spark, b, QI, SENS, k=5, t=t, mode=mode)
+        assert fast == slow, (mode, t)
+    assert fast  # t=0.2 keeps classes
+
+
+def _crafted(spark):
+    rows = (
+        [("a", "A")] * 3 + [("a", "B")] * 2 + [("a", None)]  # NULL sensitive value
+        + [("b", None)] * 5                                    # all-NULL-sensitive class
+        + [(None, "A")] * 6                                    # NULL QI
+        + [("c", "C")]                                         # below k
+        + [("d", "B")] * 4 + [("d", "C")] * 2
+    )
+    return spark.createDataFrame(rows, "g string, s string")
+
+
+@pytest.mark.parametrize("mode", ["strict", "reference"])
+def test_driver_verdict_null_edges(spark, mode):
+    df = _crafted(spark)
+    for t in (0.0, 0.1, 0.4, 1.0):
+        fast, slow = _both_paths(spark, df, ["g"], "s", k=2, t=t, mode=mode)
+        assert fast == slow, (mode, t)
+        kept = {r[0] for r in fast}
+        assert None not in kept and "c" not in kept
+        # the all-NULL-sensitive class has EMD 0.0: kept for every t >= 0
+        assert "b" in kept
+
+
+def test_driver_verdict_single_value_support(spark):
+    df = spark.createDataFrame(
+        [("x", "A")] * 3 + [("y", "A")] * 2 + [("y", None)] + [("z", "A")],
+        "g string, s string",
+    )
+    fast, slow = _both_paths(spark, df, ["g"], "s", k=2, t=0.0)
+    assert fast == slow
+    assert {r[0] for r in fast} == {"x", "y"}
+
+
+def test_driver_verdict_empty_input(spark):
+    df = spark.createDataFrame([], "g string, s string")
+    for mode in ("strict", "reference"):
+        fast, slow = _both_paths(spark, df, ["g"], "s", k=2, t=0.1, mode=mode)
+        assert fast == slow == []
+
+
+@pytest.mark.parametrize(
+    "a_counts, t, kept",
+    [
+        # EMD = 1/1024 = 0.0009765625: HALF_UP to 9 dp is 0.000976563
+        ((1, 3), 0.000976563, True),
+        ((1, 3), 0.000976562, False),  # half-even would keep it
+        # EMD = 1/2048 = 0.00048828125 rounds down onto t exactly
+        ((1, 2), 0.000488281, True),  # unrounded would drop it
+        ((1, 2), 0.00048828, False),
+    ],
+)
+def test_driver_verdict_rounding_boundary(spark, a_counts, t, kept):
+    """Two classes of 1024 rows over support {A, B}: EMD is |p_A - g_A|,
+    a decimal-exact double sitting on the 9-dp rounding boundary of t."""
+    rows = []
+    for g, n_a in zip(("x", "y"), a_counts):
+        rows += [(g, "A")] * n_a + [(g, "B")] * (1024 - n_a)
+    df = spark.createDataFrame(rows, "g string, s string")
+    fast, slow = _both_paths(spark, df, ["g"], "s", k=2, t=t)
+    assert fast == slow
+    assert ({r[0] for r in fast} == {"x", "y"}) is kept
+
+
+def test_driver_verdict_numeric_qi_and_sensitive(spark):
+    """Int/decimal/NaN keys group, sort and round-trip as Spark's do."""
+    from decimal import Decimal
+
+    nan = float("nan")
+    rows = (
+        [(1, Decimal("1.50"), nan)] * 3 + [(1, Decimal("1.50"), 2.0)] * 2
+        + [(2, Decimal("0.10"), -1.0)] * 4 + [(2, Decimal("0.10"), nan)]
+        + [(3, None, 2.0)] * 5
+    )
+    df = spark.createDataFrame(rows, "q int, d decimal(10,2), s double")
+    for t in (0.0, 0.3, 1.0):
+        fast, slow = _both_paths(spark, df, ["q", "d"], "s", k=2, t=t)
+        assert repr(fast) == repr(slow), t  # repr: NaN == NaN
+
+
+# ---------------------------------------------------------------------------
+# bin_equal_width: literal bounds vs the cross-joined min/max formulation
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "ddl, values",
+    [
+        ("int", [0, 3, 7, 10, None, 5]),
+        ("decimal(10,2)", ["1.00", "2.80", "3.75", "10.00", None]),
+        ("double", [0.5, 1.25, 9.75, -3.0, None]),
+        ("int", [None, None]),  # all NULL
+        ("decimal(10,2)", ["4.20", "4.20", None]),  # constant
+    ],
+)
+def test_bin_equal_width_matches_cross_join_form(spark, ddl, values):
+    from decimal import Decimal
+
+    from dbms_data_anonymity_differential_privacy_spark.functions.binning import (
+        equal_width_bin_sql,
+    )
+
+    if ddl.startswith("decimal"):
+        values = [None if v is None else Decimal(v) for v in values]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], f"id int, x {ddl}")
+    got = {r.id: r.x_bin for r in bin_equal_width(df, "x", 4).collect()}
+    df.createOrReplaceTempView("bin_src")
+    want = {r.id: r.x_bin for r in spark.sql(equal_width_bin_sql("bin_src", "x", 4)).collect()}
+    assert got == want
+    assert dict(bin_equal_width(df, "x", 4).dtypes)["x_bin"] == "int"
+
+
+def test_bin_equal_width_rejects_stream(spark):
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match="batch DataFrame"):
+        bin_equal_width(stream, "value", 5)
